@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from calp_cva_tracking_pipeline_spark.sources.literal import literal_table
+
 
 def when_cascade(init: Column, rules: list[tuple[Column, Column]]) -> Column:
     """Sequential-overwrite semantics as one expression.
@@ -272,9 +274,8 @@ def apply_patch_map(
     join + coalesce(patched, original). The patch table is human-curated and
     tiny, so this is a map-side hash probe — the 100 TB side never moves."""
     out_col = out_col or key_col
-    spark = df.sparkSession
-    patch_df = spark.createDataFrame(
-        patches, schema="__patch_from string, __patch_to string"
+    patch_df = literal_table(
+        df.sparkSession, patches, "__patch_from string, __patch_to string"
     )
     return (
         df.join(

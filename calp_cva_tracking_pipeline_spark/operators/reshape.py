@@ -13,6 +13,8 @@ from typing import Iterable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from calp_cva_tracking_pipeline_spark.sources.literal import literal_table
+
 
 def _qcol(name: str) -> Column:
     """Column ref that tolerates the reference's dotted column names
@@ -173,8 +175,9 @@ def fan_out_rows(
     with the key replaced. Reference semantics: deflator territory fan-out
     GBR→AIA/MSR/SHN etc., code/03_deflators.R:131-147.
     """
-    spark = df.sparkSession
-    map_df = spark.createDataFrame(mapping, schema=f"__src string, __dst string")
+    map_df = literal_table(
+        df.sparkSession, mapping, "__src string, __dst string"
+    )
     copies = (
         df.join(F.broadcast(map_df), F.col(key_col) == F.col("__src"), "inner")
         .withColumn(key_col, F.col("__dst"))

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from calp_cva_tracking_pipeline_spark.operators.cascade import apply_patch_map
+from calp_cva_tracking_pipeline_spark.sources.literal import literal_table
 
 # reference code/03_deflators.R:91-123
 OECD_DAC_ISO3 = [
@@ -46,9 +47,8 @@ def _replace_with_copies(
 ) -> DataFrame:
     """X7 fan-out with replace semantics: rows for target ISOs are dropped,
     then each (src, dst) pair appends a copy of src's rows under dst."""
-    spark = df.sparkSession
     map_df = F.broadcast(
-        spark.createDataFrame(mapping, "src string, dst string")
+        literal_table(df.sparkSession, mapping, "src string, dst string")
     )
     targets = map_df.select(F.col("dst").alias("ISO")).distinct()
     kept = df.join(F.broadcast(targets), "ISO", "left_anti")

@@ -20,6 +20,7 @@ from calp_cva_tracking_pipeline_spark.functions.text import (
     canonicalize_name,
     regex_quote,
 )
+from calp_cva_tracking_pipeline_spark.sources.literal import literal_table
 
 # Canonicalized tokens treated as "no recipient" (code/10:99-101)
 UNMATCHABLE_NAMES = ["unknown", "not provided potentially sensitive"]
@@ -64,30 +65,28 @@ def match_org_names(
         canonicalize_name(F.col(right_names.columns[0])).alias("rname")
     ).distinct()
     rc = rc.filter(F.col("rname").isNotNull() & (F.col("rname") != ""))
-    # the pair scan and the join-back both consume the name lists, and
-    # Spark replans a derived frame once per consumer (exchange reuse
-    # never fires across these subtrees — the r14 plan audit read 10
-    # scans / 22 exchanges / 0 reuse for the EP3 chain): CACHE the
-    # canonical-distinct frames so execution computes them once. cache()
-    # over localCheckpoint here because checkpointing forces physical
-    # planning at CONSTRUCTION time (~0.3-2s per frame, measured — it
-    # must build the RDD), while cache registration is free and the
-    # frames are org-universe-sized by the module contract (hundreds to
-    # low thousands of names — LRU-evictable dimension state).
-    lc = lc.cache()
-    rc = rc.cache()
+    # the `\b…\b` word-boundary patterns depend on one side only: build
+    # them once per name, not once per pair
+    lc = lc.withColumn(
+        "__pl",
+        F.concat(F.lit("\\b"), regex_quote(F.col("name")), F.lit("\\b")),
+    )
+    rc = rc.withColumn(
+        "__pr",
+        F.concat(F.lit("\\b"), regex_quote(F.col("rname")), F.lit("\\b")),
+    )
 
-    # ALL FOUR stages over ONE pair scan + ONE priority aggregate
-    # (round-14: the stage-per-join spelling planned 4 cross joins,
-    # 3 rank windows and 3 coalesce joins over the SAME pair space —
-    # ~10 sequential broadcast stages; the fused form is pair scan →
-    # grouped pick → one broadcast join back). Per-stage tie-breaks
-    # are bit-identical: struct-min (distance, rname) ≡ the fuzzy
-    # window's (dist asc, rname asc) row_number cut, struct-min
-    # (container_len, rname) ≡ the substring windows'
-    # shortest-container-then-lex cut — see operators.joins.
-    # fuzzy_name_join / substring_join, which remain the standalone
-    # J10/J11 operators with those windows.
+    # ALL FOUR stages in ONE broadcast left join + ONE grouped pick. The
+    # join condition is the OR of the stage predicates, so only matching
+    # pairs reach the aggregate (the nested loop filters the name cross
+    # product as it streams), and a name no stage matches keeps its single
+    # null-padded row — the output needs no join back to the left names.
+    # Each side is consumed exactly once, so nothing is cached. Per-stage
+    # tie-breaks are bit-identical to the standalone J10/J11 operators
+    # (operators.joins.fuzzy_name_join / substring_join): struct-min
+    # (distance, rname) ≡ the fuzzy window's (dist asc, rname asc)
+    # row_number cut, struct-min (container_len, rname) ≡ the substring
+    # windows' shortest-container-then-lex cut.
     dist = F.levenshtein(F.col("name"), F.col("rname"))
     threshold = F.greatest(
         F.lit(1), F.ceil(F.length(F.col("name")) * F.lit(0.2))
@@ -106,21 +105,6 @@ def match_org_names(
     )
     if fuzzy_veto:
         is_fuzzy = is_fuzzy & ~F.col("name").isin(list(fuzzy_veto))
-    pairs = (
-        lc.crossJoin(F.broadcast(rc))
-        .withColumn(
-            "__pl",
-            F.concat(
-                F.lit("\\b"), regex_quote(F.col("name")), F.lit("\\b")
-            ),
-        )
-        .withColumn(
-            "__pr",
-            F.concat(
-                F.lit("\\b"), regex_quote(F.col("rname")), F.lit("\\b")
-            ),
-        )
-    )
     # plain-substring containment is NECESSARY for the word-boundary
     # regex to hit (the pattern is the quoted literal) and evaluates as
     # a fast memmem — short-circuit it before the per-pair regex
@@ -130,60 +114,58 @@ def match_org_names(
     is_sub_b = F.col("name").contains(F.col("rname")) & F.expr(
         "rlike(name, __pr)"
     )
-    picks = pairs.groupBy("name").agg(
-        F.max(F.when(is_exact, F.col("rname"))).alias("exact_match"),
-        F.min(
-            F.when(
-                is_fuzzy,
-                F.struct(dist.alias("d"), F.col("rname").alias("m")),
-            )
-        ).alias("__f"),
-        F.min(
-            F.when(
-                is_sub_a,
-                F.struct(
-                    F.length("rname").alias("d"),
-                    F.col("rname").alias("m"),
-                ),
-            )
-        ).alias("__a"),
-        F.min(
-            F.when(
-                is_sub_b,
-                F.struct(
-                    F.length("name").alias("d"),
-                    F.col("rname").alias("m"),
-                ),
-            )
-        ).alias("__b"),
+    picks = (
+        lc.join(
+            F.broadcast(rc), is_exact | is_fuzzy | is_sub_a | is_sub_b, "left"
+        )
+        .groupBy("name")
+        .agg(
+            F.max(F.when(is_exact, F.col("rname"))).alias("exact_match"),
+            F.min(
+                F.when(
+                    is_fuzzy,
+                    F.struct(dist.alias("d"), F.col("rname").alias("m")),
+                )
+            ).alias("__f"),
+            F.min(
+                F.when(
+                    is_sub_a,
+                    F.struct(
+                        F.length("rname").alias("d"),
+                        F.col("rname").alias("m"),
+                    ),
+                )
+            ).alias("__a"),
+            F.min(
+                F.when(
+                    is_sub_b,
+                    F.struct(
+                        F.length("name").alias("d"),
+                        F.col("rname").alias("m"),
+                    ),
+                )
+            ).alias("__b"),
+        )
     )
-    out = (
-        lc.join(F.broadcast(picks), "name", "left")
-        .withColumn(
-            "matched_name",
-            F.coalesce(
-                F.col("exact_match"),
-                F.col("__f.m"),
-                F.col("__a.m"),
-                F.col("__b.m"),
-            ),
-        )
-        .withColumn(
-            "match_method",
-            F.coalesce(
-                F.when(F.col("exact_match").isNotNull(), "exact"),
-                F.when(F.col("__f").isNotNull(), "fuzzy"),
-                F.when(F.col("__a").isNotNull(), "substring_a"),
-                F.when(F.col("__b").isNotNull(), "substring_b"),
-            ),
-        )
-        .select("name", "matched_name", "match_method")
+    out = picks.select(
+        "name",
+        F.coalesce(
+            F.col("exact_match"),
+            F.col("__f.m"),
+            F.col("__a.m"),
+            F.col("__b.m"),
+        ).alias("matched_name"),
+        F.coalesce(
+            F.when(F.col("exact_match").isNotNull(), "exact"),
+            F.when(F.col("__f").isNotNull(), "fuzzy"),
+            F.when(F.col("__a").isNotNull(), "substring_a"),
+            F.when(F.col("__b").isNotNull(), "substring_b"),
+        ).alias("match_method"),
     )
     if manual_overrides:
         # manual decisions override every automatic stage (code/10:226-285)
-        spark = out.sparkSession
-        ovr = spark.createDataFrame(
-            manual_overrides, "name string, __manual string"
+        ovr = literal_table(
+            out.sparkSession, manual_overrides, "name string, __manual string"
         )
         out = (
             out.join(F.broadcast(ovr), "name", "left")

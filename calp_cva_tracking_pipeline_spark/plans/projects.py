@@ -5,9 +5,10 @@ classify_cva consumes, from the long Q&A table: labeled-question splits,
 the branch-ordered percentage standardizer re-expressed as ONE native
 when-chain (M3 — no Python UDF, stays in codegen), boolean normalization
 (C3), clamp-sum (A1) and bool-max (A2) aggregates, the two-way overlap
-reconciliation (SO1 anti-joins), the J5 full-outer merge, and the final
-cva override rules. All shuffles are per-project aggregations; question
-label sets broadcast.
+reconciliation (the reference's SO1 anti-joins) and J5 full-outer merge,
+and the final cva override rules. The whole program is one scan of the
+Q&A table, one broadcast join to the label table and one per-project
+aggregate; the reconciliation and merge are column expressions over it.
 """
 
 from __future__ import annotations
@@ -64,60 +65,61 @@ def build_project_features(
     ``projects_qa``: long (project_id, question, answer);
     ``question_labels``: (question, question_type) with types from
     {quantC, quantV, flagCVA, ...} (reference cva_project_questions.csv).
+    A null ``project_id`` is one project: its quant and flag answers meet
+    in one group and yield one row (R's ``setdiff``/``merge`` match NA
+    keys by default; Spark's anti and outer joins never match NULL, so a
+    join-based formulation would emit unmerged null rows instead).
     """
-    quant_qs = question_labels.filter(
-        F.col("question_type").isin("quantC", "quantV")
-    ).select("question")
-    flag_qs = question_labels.filter(
-        F.col("question_type") == "flagCVA"
-    ).select("question")
-
-    # quant side: labeled questions, digit-bearing answers (F10), branch
-    # chain, A1 clamp-sum (code/07:100-132)
-    quant = (
-        projects_qa.join(F.broadcast(quant_qs), "question")
-        .filter(F.col("answer").rlike(ANSWER_NUMBER_PATTERN))
-        .withColumn("__pct", standardize_percentage(F.col("answer")))
+    qt = F.col("question_type")
+    labels = question_labels.filter(
+        qt.isin("quantC", "quantV", "flagCVA")
+    ).select("question", "question_type")
+    # quant rows: labeled questions with digit-bearing answers (F10,
+    # code/07:100-101); flag rows: every flagCVA-labeled answer
+    is_quant = qt.isin("quantC", "quantV") & F.col("answer").rlike(
+        ANSWER_NUMBER_PATTERN
+    )
+    is_flag = qt == "flagCVA"
+    # ONE scan, ONE broadcast join, ONE per-project aggregate: quant count,
+    # A1 sum of the branch chain (code/07:104-132), flag count, A2 bool-max
+    # (code/07:134-143). CASE WHEN evaluates the chain only on quant rows.
+    agg = (
+        projects_qa.join(F.broadcast(labels), "question")
         .groupBy("project_id")
         .agg(
-            (
-                F.least(F.lit(100.0), F.sum("__pct")) / 100.0
-            ).alias("cva_percentage")
+            F.count(F.when(is_quant, F.lit(1))).alias("__nq"),
+            F.sum(
+                F.when(is_quant, standardize_percentage(F.col("answer")))
+            ).alias("__sum"),
+            F.count(F.when(is_flag, F.lit(1))).alias("__nf"),
+            F.max(
+                F.when(
+                    is_flag, standardize_boolean(F.col("answer")).cast("int")
+                )
+            ).alias("__fmax"),
         )
     )
-    # boolean side: C3 + A2 (code/07:134-143)
-    flags = (
-        projects_qa.join(F.broadcast(flag_qs), "question")
-        .withColumn("__b", standardize_boolean(F.col("answer")))
-        .groupBy("project_id")
-        .agg((F.max(F.col("__b").cast("int")) == 1).alias("cva"))
-    )
-
-    # overlap reconciliation (code/07:146-160): projects quantified at 0%
-    # gain cva=FALSE rows if absent from the flag side; flagged-FALSE
-    # projects gain 0% rows if absent from the quant side (SO1 anti-joins)
-    zero_to_bool = (
-        quant.filter(F.col("cva_percentage") == 0)
-        .join(flags.select("project_id"), "project_id", "left_anti")
-        .select("project_id", F.lit(False).alias("cva"))
-    )
-    flags = flags.unionByName(zero_to_bool)
-    bool_to_zero = (
-        flags.filter(~F.col("cva"))
-        .join(quant.select("project_id"), "project_id", "left_anti")
-        .select("project_id", F.lit(0.0).alias("cva_percentage"))
-    )
-    quant = quant.unionByName(bool_to_zero)
-
-    # J5 full outer + final override: pct>0 → TRUE, pct==0 → FALSE
+    nq, nf = F.col("__nq"), F.col("__nf")
+    # least() skips nulls: a quant side whose answers all standardize to
+    # null clamps to 100% (pinned by the parity tests)
+    pct_q = F.least(F.lit(100.0), F.col("__sum")) / 100.0
+    flag = F.col("__fmax") == 1
+    # overlap reconciliation (code/07:146-160) as column expressions:
+    # flagged-FALSE projects without a quant row gain 0%, projects
+    # quantified at 0% without a flag row gain cva=FALSE; a null flag
+    # (all answers null) gains neither
+    pct = F.when(nq > 0, pct_q).when((nf > 0) & ~flag, F.lit(0.0))
+    cva = F.when(nf > 0, flag).when((nq > 0) & (pct_q == 0), F.lit(False))
+    # J5 merge + final override: pct>0 → TRUE, pct==0 → FALSE
     # (code/07:158-160)
-    merged = quant.join(flags, "project_id", "full_outer")
-    cva = (
-        F.when(F.col("cva_percentage") > 0, F.lit(True))
-        .when(F.col("cva_percentage") == 0, F.lit(False))
-        .otherwise(F.col("cva"))
+    return agg.filter((nq > 0) | (nf > 0)).select(
+        "project_id",
+        pct.alias("cva_percentage"),
+        F.when(pct > 0, F.lit(True))
+        .when(pct == 0, F.lit(False))
+        .otherwise(cva)
+        .alias("cva"),
     )
-    return merged.withColumn("cva", cva)
 
 
 def project_text(projects_qa: DataFrame) -> DataFrame:

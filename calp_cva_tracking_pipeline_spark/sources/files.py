@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 NULL_TOKENS = ["", "n/a", "--", "NULL", "NA"]
 
@@ -29,10 +30,10 @@ def read_csv(
     semantics: the first null token rides the reader's ``nullValue`` and
     any other token fails the typed parse in PERMISSIVE mode, landing as
     null — exactly fread's na.strings behavior. String columns are
-    normalized by replacement afterwards. Without a schema, types are
-    inferred and only string-typed columns can carry the replacement
-    (a multi-token null in a numeric column forces that column to string;
-    declare a schema to avoid it).
+    normalized afterwards, every token in one projection. Without a
+    schema, types are inferred and only string-typed columns can carry the
+    replacement (a multi-token null in a numeric column forces that column
+    to string; declare a schema to avoid it).
     """
     tokens = null_tokens if null_tokens is not None else NULL_TOKENS
     tokens = [t for t in tokens if t != ""]
@@ -44,9 +45,18 @@ def read_csv(
     else:
         reader = reader.option("inferSchema", True)
     df = reader.csv(path)
-    for tok in tokens:
-        df = df.replace(tok, None)
-    return df
+    if not tokens:
+        return df
+    # ONE projection folds every token: chained replace() calls would add
+    # a Project per token and nest pushed-down filters a CASE WHEN deep
+    # per token
+    cols = []
+    for f in df.schema.fields:
+        c = F.col("`" + f.name.replace("`", "``") + "`")
+        if isinstance(f.dataType, StringType):
+            c = F.when(c.isin(tokens), F.lit(None)).otherwise(c).alias(f.name)
+        cols.append(c)
+    return df.select(*cols)
 
 
 def read_tsv_utf16(spark: SparkSession, path: str, **options) -> DataFrame:
@@ -135,11 +145,17 @@ def write_partitioned(
     within each output file so parquet min/max statistics enable row-group
     skipping on those columns (the cheap cousin of Z-ordering — worth it
     for the high-selectivity keys a 100 TB table is filtered by)."""
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     if sort_cols:
         df = df.sortWithinPartitions(*sort_cols)
-    df.write.mode(mode).partitionBy(partition_col).parquet(path)
+    # per-write option, not the session conf: setting
+    # spark.sql.sources.partitionOverwriteMode would make every later
+    # partitioned overwrite in the session dynamic as well
+    (
+        df.write.mode(mode)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )
 
 
 def cached_table(

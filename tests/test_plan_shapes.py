@@ -931,21 +931,25 @@ def test_round13_tier_plan_shapes(spark, sf_dir):
 
 
 def test_matcher_fused_plan_stays_fused(spark, sf_dir):
-    """Round-14 EP3 rework: the 4-stage matcher is ONE pair scan + ONE
-    priority aggregate + one join-back (was 4 cross joins + 3 rank
-    windows + 3 coalesce joins). Pin the fused shape: the org-match
-    chain's executed plan must carry at most 4 joins and ZERO rank
-    windows (struct-min picks replaced them), and at most 2 parquet
-    scans (name lists cached, the r14 audit read 10 before)."""
+    """The EP3 matcher is ONE broadcast left outer nested-loop join of the
+    distinct left names against the broadcast right names (the match
+    predicate is the OR of the four stages) + ONE per-name priority
+    aggregate, then the manual-override join (was 4 cross joins + 3 rank
+    windows + 3 coalesce joins, then a cached pair cross join + a full
+    pair aggregate + a join back). Pin the shape: exactly one left outer
+    BroadcastNestedLoopJoin, at most 4 joins, ZERO rank windows (struct-min
+    picks replaced them), and no cache reads (the name lists are not
+    cached, so each side is read once and AQE may coalesce its
+    partitions)."""
     import calp_cva_tracking_pipeline_spark.catalog.relational as R
 
     df = R.RELATIONAL_QUERIES["ep3_org_match"][0](spark, sf_dir)
     df.write.format("noop").mode("overwrite").save()
     plan = _executed(df)
-    # the cached name lists serve every consumer (the plan STRING still
-    # prints the cached subtree under each InMemoryRelation, so raw
-    # parquet-scan counts overstate execution — count the cache reads)
-    assert plan.count("InMemoryTableScan") >= 2, plan
+    nlj = [ln for ln in plan.splitlines() if "BroadcastNestedLoopJoin" in ln]
+    assert len(nlj) == 1 and "LeftOuter" in nlj[0], plan
+    assert "InMemoryTableScan" not in plan, plan
+    assert "InMemoryRelation" not in plan, plan
     n_joins = plan.count("Join")
     assert n_joins <= 4, f"matcher re-grew join stages: {n_joins}"
     assert "row_number" not in plan.lower().replace(

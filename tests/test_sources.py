@@ -218,6 +218,72 @@ def test_s4_s5_partitioned_overwrite(spark, tmp_path):
 # --- S7: UTF-16 TSV with WEO null tokens -------------------------------------
 
 
+def test_read_csv_folds_null_tokens_in_one_projection(spark, tmp_path):
+    p = tmp_path / "in.csv"
+    p.write_text("iso,`odd.name`,n\nFRA,NA,1\nDEU,ok,--\n--,NULL,2\n")
+    df = read_csv(
+        spark, str(p), schema="iso string, `odd.name` string, n int"
+    )
+    plan = df._jdf.queryExecution().optimizedPlan()
+    # one Project directly over the scan, not one per null token
+    assert plan.nodeName() == "Project", plan.toString()
+    assert plan.children().apply(0).nodeName() == "LogicalRelation", (
+        plan.toString()
+    )
+    # a filter over it pushes below the Project with ONE token test
+    pushed = df.filter(F.col("iso") == "x")._jdf.queryExecution()
+    filters = [
+        line for line in pushed.optimizedPlan().toString().splitlines()
+        if "Filter" in line
+    ]
+    assert len(filters) == 1 and filters[0].count("CASE WHEN") == 1, filters
+    assert [tuple(r) for r in df.orderBy("n").collect()] == [
+        ("DEU", "ok", None), ("FRA", None, 1), (None, None, 2),
+    ]
+
+
+def test_literal_table_plans_in_the_jvm(spark):
+    from calp_cva_tracking_pipeline_spark.sources.literal import (
+        literal_table,
+    )
+
+    ddl = "`a b` string, n int, x double"
+    rows = [("it's", 1, 0.5), ("'); DROP TABLE t; --", None, None)]
+    df = literal_table(spark, rows, ddl)
+    assert [tuple(r) for r in df.collect()] == rows
+    assert df.schema.simpleString() == "struct<a b:string,n:int,x:double>"
+    assert "LocalTableScan" in (
+        df._jdf.queryExecution().executedPlan().toString()
+    )
+    empty = literal_table(spark, [], ddl)
+    assert empty.collect() == []
+    assert empty.schema.simpleString() == df.schema.simpleString()
+    with pytest.raises(ValueError, match="row 1"):
+        literal_table(spark, [("a", 1, 1.0), ("b", 2)], ddl)
+
+
+def test_write_partitioned_keeps_session_overwrite_static(spark, tmp_path):
+    """The dynamic mode is per write: a later plain partitioned overwrite
+    in the same session still replaces the whole table."""
+    mode = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(mode)
+    out = str(tmp_path / "facts")
+    df = spark.createDataFrame(
+        [(1, 2020), (2, 2021)], "id long, year int"
+    )
+    write_partitioned(df, out, "year")
+    write_partitioned(df.filter("year = 2021"), out, "year")
+    assert spark.conf.get(mode) == before
+    assert sorted(tuple(r) for r in spark.read.parquet(out).collect()) == [
+        (1, 2020), (2, 2021),
+    ]
+    plain = spark.createDataFrame([(3, 2022)], "id long, year int")
+    plain.write.mode("overwrite").partitionBy("year").parquet(out)
+    assert [tuple(r) for r in spark.read.parquet(out).collect()] == [
+        (3, 2022)
+    ]
+
+
 def test_s7_tsv_utf16(spark, tmp_path):
     p = tmp_path / "weo.xls"  # the reference's .xls is really a TSV
     content = "ISO\t1980\t1981\nFRA\t1,234.5\tn/a\nDEU\t--\t7.5\n"
